@@ -15,7 +15,7 @@ object GraftSession {
     * (guide §9's cluster range — at 100 TB a 1 MB advisory would plan
     * ~10⁸ post-shuffle partitions), overridable via
     * `SPARK_GRAFT_ADVISORY_PARTITION_BYTES`. The LOCAL profile
-    * ([[configureLocal]] — Bench/Verify/ProfileQ/tests) passes 1m
+    * ([[configureLocal]] — Bench/Verify/tests) passes 1m
     * explicitly: the graded sf0.1 inputs are KB–MB scale, where 64m would
     * collapse every shuffle to one task (VERDICT r21 #5: ship the
     * production value by default, let the local profile override down).

@@ -286,8 +286,8 @@ object Dedup {
     *
     * Like `Sketches.vocabWithCmsGate`, the gate is EAGER by design (the
     * filter must exist before the plan is built — one action over the
-    * incoming batch, which is persisted since the final join reuses it);
-    * deliberately excluded from PlanDump for that reason.
+    * incoming batch, which is persisted since the final join reuses it),
+    * so its lazy plan shows the post-gate join only, not the gate.
     */
   def dedupAgainstBaselineBloom(incoming: DataFrame, baseline: DataFrame,
                                 idCol: String = "doc_id", textCol: String = "text",
@@ -614,8 +614,8 @@ object Dedup {
     * optimizer can see the join key as a stored column (these keys are
     * computed, so it can't). Eager by design like the exact-dedup twin
     * (the filter must exist before the baseline plan is built; the batch
-    * side is persisted since the union reuses it); excluded from PlanDump
-    * for that reason.
+    * side is persisted since the union reuses it), so its lazy plan shows
+    * the post-gate union only, not the gate.
     */
   def minhashLshAgainstBaselineBloom(incoming: DataFrame, baseline: DataFrame,
                                      idCol: String = "doc_id", textCol: String = "text",

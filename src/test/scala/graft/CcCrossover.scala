@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
-/** Dev-only A/B harness (test scope, like `Scratch`): measures the
+/** Dev-only A/B harness (test scope, like `Probe`): measures the
   * `Dedup.dedupClusters` strategy switch — driver-side union-find vs
   * distributed min-label propagation — AT its `maxLocalEdges` gate (2^20 until r15,
   * now 2^22 — measured here, raised on this harness's evidence).

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -17,22 +16,7 @@ import org.apache.spark.storage.StorageLevel
   */
 class PartitioningSpec extends SparkSpec {
 
-  private def countJobs(body: => Unit): Int = {
-    @volatile var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // listener events are posted asynchronously; give the bus time to
-      // drain before reading (a missed late event could only turn a REAL
-      // regression into a pass, never flake a correct implementation —
-      // and 500 ms is far beyond the bus's idle dispatch latency)
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs
-  }
+  private def countJobs(body: => Unit): Int = QueryMetrics.measure(spark)(body).jobs
 
   private def docs: DataFrame =
     sources.Tables.documents(spark, "/root/testdata/sf0.001")

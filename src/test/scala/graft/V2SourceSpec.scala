@@ -233,7 +233,7 @@ class V2SourceSpec extends SparkSpec {
     val expected = sources.Tables.customer(spark, dir)
       .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY")).count()
     assert(q.collect().map(_.getLong(0)).toSeq === Seq(expected))
-    // Bench/Scratch wrap every graded query in .count(): the inner
+    // Bench wraps every graded query in .count(): the inner
     // aggregate's output goes dead, Spark strips its CountStar, and the
     // scan legitimately pages — the row must still evaluate, not throw
     assert(q.count() === 1L)
