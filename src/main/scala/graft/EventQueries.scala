@@ -49,7 +49,6 @@ object EventQueries {
     * streaming test drives across micro-batches.
     */
   private val userTotals: Q = (s, d) => {
-    import s.implicits._
     EventsStream.runningUserTotals(Tables.events(s, d))
       .toDF("user_id", "n_events", "value_cents")
   }
@@ -68,7 +67,6 @@ object EventQueries {
     * negative running total cannot split the engines.
     */
   private val spendAlerts: Q = (s, d) => {
-    import s.implicits._
     EventsStream.spendAlerts(Tables.events(s, d), stepCents = 5000L)
       .toDF("user_id", "boundary_cents", "event_id")
   }
@@ -92,7 +90,6 @@ object EventQueries {
     * batch mode — same oracle as `funnel`, like `asof_stream`/`asof_join`.
     */
   private val funnelStream: Q = (s, d) => {
-    import s.implicits._
     EventsStream.funnelProgress(Tables.events(s, d))
       .toDF("user_id", "view_ms", "click_ms", "purchase_ms", "depth")
   }

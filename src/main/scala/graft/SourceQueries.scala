@@ -56,7 +56,9 @@ object SourceQueries {
     val store = new SnapshotStore("/tmp/graft_snapshots")
     store.write(Tables.nation(s, d).filter(org.apache.spark.sql.functions.col("n_nationkey") < 10),
       "run_a", "nation")
+    store.commit(s, "run_a")
     store.write(Tables.nation(s, d), "run_b", "nation")
+    store.commit(s, "run_b")
     val latest = store.latestRun(s).getOrElse(sys.error("no snapshot written"))
     store.read(s, latest, "nation")
   }

@@ -2464,8 +2464,8 @@ object TextQueries {
     * renders 9×4 block-brightness patterns in normalized coordinates
     * (`k = p mod 256`, every 9th doc borrowing its predecessor's pattern
     * at its own dimensions with one block bumped — planted resized-and-
-    * edited twins), `nearDupImages` dHashes the decoded raster and bands
-    * 4×16 bits. The oracle replays the NN grid sample
+    * edited twins), `perceptualHash` dHashes the decoded raster and
+    * `nearDupHashes` bands 4×16 bits. The oracle replays the NN grid sample
     * (`gx = (2i+1)w ÷ 18, gy = (2j+1)h ÷ 16`), the gradient-sign bits,
     * the band chunks, and the Hamming verify in pure integer SQL —
     * possible only because every decoded sample is one exact raster
@@ -2765,7 +2765,7 @@ object TextQueries {
       scala.jdk.CollectionConverters.SeqHasAsJava(buf.toSeq).asJava), schema)
   }
 
-  /** Semantic multimodal dedup — the composition proof: `imageEmbedding`
+  /** Semantic multimodal dedup — the composition proof: `embeddingFromGrid`
     * lifts the same decoded grid into a 72-dim vector and the EXISTING
     * `Similarity.cosineNearDup` (LSH-bucketed, id-ordered pairs) runs
     * unchanged on it. The oracle rebuilds the embedding arithmetically
@@ -2821,8 +2821,8 @@ object TextQueries {
     * HIGHEST-RESOLUTION member (decoded `width·height` from the same
     * decode pass, read off the shared grid layer; tie → lowest id) —
     * production keeps the sharpest copy, not the first-crawled id.
-    * Pure composition (`Multimodal.collapseNearDupMedia` =
-    * `nearDupHashes` → `dedupClusters` → `collapseKeepBest`); the
+    * Pure composition (`Multimodal.nearDupHashes` →
+    * `Dedup.dedupClusters` → `Dedup.collapseKeepBest`); the
     * oracle replays the pair CTEs and clusters them with the recursive
     * reachable-set + keep-best window (the dedup_keep_best pattern on
     * the mm pair graph, with the resolution formula from the fixture's

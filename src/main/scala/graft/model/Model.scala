@@ -5,30 +5,6 @@ package graft.model
   * rewrites the PKs to stable Longs.
   */
 object Model {
-  case class LocalAuth(la_code: Int, la_name: String)
-  case class Locality(locality_code: String, locality_name: String, locality_type: String,
-                      la_code: Int, state: String, status: Option[String])
-  case class Road(road_id: String, road_cat: Option[String], road_name: String,
-                  road_name_suffix: Option[String], road_name_type: Option[String],
-                  locality_code: String, road_cat_desc: String)
-  case class Parcel(parcel_id: String, plan_no: String, lot_no: String)
-  case class Site(site_id: String, parent_site_id: Option[String], site_type: String,
-                  parcel_id: Option[String])
-  case class PlaceName(place_name_id: String, pl_name_status_code: String,
-                       pl_name_type_code: String, pl_name: String, site_id: String)
   case class Geocode(geocode_id: String, geocode_type: String, address_pid: Option[String],
                      site_id: Option[String], centoid_lat: Option[Double], centoid_lon: Option[Double])
-  case class Address(addr_id: String, address_pid: Option[String], addr_status_code: String,
-                     unit_type: Option[String], unit_no: Option[String], unit_suffix: Option[String],
-                     level_type: Option[String], level_no: Option[String], level_suffix: Option[String],
-                     street_no_first: Option[String], street_no_first_suffix: Option[String],
-                     street_no_last: Option[String], street_no_last_suffix: Option[String],
-                     road_id: String, site_id: String, location_desc: Option[String],
-                     address_standard: Option[String])
-  case class AddressIriPid(address_iri: String, address_pid: String)
-  case class GeocodeTypeCode(geocode_type_iri: String, code: String)
-  case class RunMetadata(start_time: String, end_time: Option[String])
-
-  /** SPARQL binding cell: value + optional datatype IRI (SURVEY.md §1.2). */
-  case class Binding(value: String, datatype: Option[String])
 }

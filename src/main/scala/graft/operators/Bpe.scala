@@ -19,9 +19,7 @@ import graft.functions.GraftFunctions._
   * [[TextAnalysis.tokenBase]] layer); every iteration of training and
   * the whole of encoding run over the DISTINCT-WORD dictionary, which is
   * orders of magnitude smaller than the corpus (Heaps' law — ~100 TB of
-  * text holds ~10⁸ distinct words, a few GB as (word, freq) rows). The
-  * corpus pays one more equi-join only if per-document token sequences
-  * are asked for ([[encodeDocs]]).
+  * text holds ~10⁸ distinct words, a few GB as (word, freq) rows).
   *
   * Semantics (all deterministic, all mirrored by the DuckDB oracles):
   *   - a word's initial symbols are its code points plus a final
@@ -318,22 +316,4 @@ object Bpe {
         .join(docTokenCounts(docs, merges, idCol, textCol), Seq(idCol)),
       budget, streamCol, idCol, textCol,
       tokenCountCol = Some("n_bpe_tokens"))
-
-  /** Per-document token sequences `(id, wpos, spos, token)` — wpos the
-    * word's position in the document, spos the subword's position in the
-    * word; `(wpos, spos)` lexicographic is the document's token order.
-    * This is the one member that touches the corpus twice: the exploded
-    * word stream joins the encoded dictionary on the word key (AQE
-    * broadcasts small vocabularies; large ones hash-join — either way the
-    * corpus shuffles words, never text).
-    */
-  def encodeDocs(docs: DataFrame, merges: Seq[(String, String)],
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val words = TextAnalysis.tokenBase(docs, idCol, textCol)
-      .select(col(idCol), posexplode(col("__tok")).as(Seq("wpos", "word")))
-    val dict = encodeWords(
-      wordFreqBase(docs, idCol, textCol).select(col("word")), merges)
-    words.join(dict, Seq("word"))
-      .select(col(idCol), col("wpos"), posexplode(col("toks")).as(Seq("spos", "token")))
-  }
 }

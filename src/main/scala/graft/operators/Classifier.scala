@@ -82,23 +82,6 @@ object Classifier {
   private def rndHalfUp(x: Double): Long =
     BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
-  /** Real features ∪ the INTERCEPT as a virtual feature at index
-    * `buckets` with cnt = n_feats: the document logit is
-    * z = Σ cnt·w / 10⁶ / n_feats, so a bias row weighted n_feats
-    * contributes exactly w_bias/10⁶ to z, its gradient through the
-    * shared nano-quantized per-document factor is exactly Σ (p−y)·10⁹,
-    * and its curvature row is exactly N·10⁹ — the intercept falls out
-    * of the SAME preconditioned update as every word bucket. It is
-    * additionally INITIALIZED to the smoothed class log-odds so descent
-    * starts at the base rate, where a class-independent bucket's
-    * expected gradient is ≈ 0 and the rate budget goes to
-    * discriminative buckets.
-    */
-  private def withBias(feats: DataFrame, nf: DataFrame, buckets: Int,
-                       idCol: String): DataFrame =
-    feats.unionByName(
-      nf.select(col(idCol), lit(buckets.toLong).as("b"), col("n_feats").as("cnt")))
-
   /** Train `iters` preconditioned full-batch gradient steps (step i
     * uses rate lr·decay^(i−1)) from zero feature weights and the
     * analytic log-odds intercept; returns the micro-unit weight vector
@@ -110,6 +93,14 @@ object Classifier {
     * `(id, b, cnt, n_feats, __y)` — built once per train(+score) pass
     * and guard-persisted; every gradient iteration AND the fused scoring
     * tail read this one frame.
+    *
+    * The INTERCEPT is a virtual feature at index `buckets` with
+    * cnt = n_feats: the document logit is z = Σ cnt·w / 10⁶ / n_feats, so
+    * a bias row weighted n_feats contributes exactly w_bias/10⁶ to z, its
+    * gradient through the shared nano-quantized per-document factor is
+    * exactly Σ (p−y)·10⁹, and its curvature row is exactly N·10⁹ — the
+    * intercept falls out of the SAME preconditioned update as every word
+    * bucket.
     */
   private def acquireFeatsY(docs: DataFrame, label: Column, buckets: Int,
                             idCol: String, textCol: String): (DataFrame, () => Unit) = {
@@ -167,7 +158,6 @@ object Classifier {
     require(buckets > 0, "need at least one feature bucket")
     require(batchPpm >= 1 && batchPpm <= 1000000,
       "batchPpm is a parts-per-million document sampling rate")
-    val spark = featsY.sparkSession
     // UNLABELED docs (null __y — a label predicate over missing
     // metadata) are excluded from TRAINING at this seam and only here:
     // they used to count in nDocs and the intercept's log-odds while
@@ -324,16 +314,6 @@ object Classifier {
       .withColumn("predicted", col("prob6") >= lit(0.5))
     (scored, release)
   }
-
-  /** Score under a `(b, w_micro)` weight FRAME — [[trainWeights]]' output
-    * fed back in, the deploy-time API: weights collect to the dense
-    * micro-unit vector (dictionary-sized, `buckets + 1` rows — never
-    * corpus data) and scoring is [[scoreLogistic]]'s one broadcast join +
-    * map-side fold.
-    */
-  def scoreWeights(docs: DataFrame, weights: DataFrame,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    scoreLogistic(docs, weightsToArray(weights), idCol, textCol)
 
   private[graft] def weightsToArray(weights: DataFrame): Array[Long] = {
     val rows = weights.select(col("b").cast("long"), col("w_micro").cast("long")).collect()

@@ -40,25 +40,6 @@ object Dedup {
       (a, b)
     }
 
-  /** Word n-gram shingles over an ALREADY-MATERIALIZED token-array column
-    * (distinct). `tk` must be a plain column reference: an inlined
-    * tokenization expression would be re-evaluated per gram inside the
-    * lambda — interpreted higher-order functions have no common-subexpression
-    * elimination, and that costs ~10× (measured 6.9s vs 0.6s at sf0.1).
-    */
-  def gramsOf(tk: Column, n: Int): Column =
-    array_distinct(
-      when(size(tk) >= n,
-        transform(sequence(lit(0), size(tk) - n), i => concat_ws(" ", slice(tk, i + lit(1), lit(n)))))
-      .otherwise(array(concat_ws(" ", tk))))
-
-  /** Word n-gram shingles of the normalized text (distinct). Convenience
-    * form for small inputs/tests; pipelines use the two-projection shape
-    * (`tokens` column first, then `gramsOf`) — see gramsOf's scaladoc.
-    */
-  def shingles(text: Column, n: Int = 3): Column =
-    gramsOf(tokens(normalizeText(text)), n)
-
   // rolling-combine base; acc*B stays < 2^52. Shared with NgramHashExpr.
   private val B = graft.functions.NgramHashExpr.B
 
@@ -77,7 +58,7 @@ object Dedup {
     * O(tokens×grams) — a measured 10-70× blowup at sf0.1.
     *
     * Documents shorter than n tokens produce one shingle padded with
-    * zero-hashes (the whole-text fallback of `gramsOf`).
+    * zero-hashes (the whole-text fallback).
     */
   /** The mod-P rolling fold, HOF form: rolling[i] after step j covers
     * h[i..i+j]; `zip_with` pads the shorter shifted slice with nulls, which
@@ -106,7 +87,7 @@ object Dedup {
     * `reduceInputs = true` consumes the FULL-60-bit shared layer, folding
     * `pmod(h, P)` into the same pass.
     */
-  private def shingleHashes(hs: Column, n: Int, reduceInputs: Boolean = false): Column =
+  private def shingleHashes(hs: Column, n: Int, reduceInputs: Boolean): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.NgramHashExpr(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(hs), n,
@@ -257,9 +238,7 @@ object Dedup {
     * both sides on `fp` — the incoming batch is typically a small
     * fraction of the corpus, so AQE broadcasts it against the baseline
     * fingerprint scan. Steady-state cost is one baseline fingerprint
-    * scan per batch; a production run persists the fingerprint column
-    * bucketed by `fp` (`SnapshotStore.writeBucketed`) so the anti join
-    * co-locates without any baseline shuffle at all.
+    * scan per batch.
     */
   def dedupAgainstBaseline(incoming: DataFrame, baseline: DataFrame,
                            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -361,7 +340,7 @@ object Dedup {
 
   /** [[urlDedupAgainstBaseline]] over a PRE-REDUCED canonical-key state —
     * the form a long-lived scheduler calls: the crawled set's DISTINCT
-    * canonical keys are computed (and persisted/bucketed) once, and each
+    * canonical keys are computed (and persisted) once, and each
     * frontier batch anti-joins the same state instead of re-reducing the
     * baseline per batch (the fingerprint-layer discipline on urls).
     */
@@ -562,9 +541,7 @@ object Dedup {
     * O(corpus) band-join work for pairs that were already adjudicated;
     * here the band join's left side is only the batch's banded rows, so
     * steady-state cost tracks the batch (the baseline contributes its
-    * banded rows to the shuffle but generates no intra-baseline pairs,
-    * and a production run persists its banded table bucketed by band key
-    * the same way the fingerprint baseline is bucketed for exact dedup).
+    * banded rows to the shuffle but generates no intra-baseline pairs).
     *
     * Hot-bucket capping applies to the UNION of both sides' rows — a
     * degenerate band key (boilerplate) is degenerate regardless of which
@@ -1284,10 +1261,8 @@ object Dedup {
   }
 
   /** Per-doc novelty fold shared by the stateless, streaming, and
-    * carry-forward forms. The gram stream arrives AS-IS: the single-
-    * consumer forms must not pay a corpus-token-sized persist, and
-    * [[advanceGramSetManaged]] — whose state merge is a second consumer —
-    * acquires it before calling here.
+    * carry-forward forms. The gram stream arrives AS-IS: these forms
+    * must not pay a corpus-token-sized persist.
     */
   private def noveltyFromGrams(grams: DataFrame, incomingIds: DataFrame,
                                seenGrams: DataFrame, idCol: String): DataFrame = {
@@ -1329,11 +1304,9 @@ object Dedup {
                      idCol: String = "doc_id", textCol: String = "text")
       : (DataFrame, DataFrame) = {
     require(n >= 2, "novelty gram width must be at least 2")
-    // one-shot form: only the hash layer registers (LRU, the standing
-    // rule) — the gram stream recomputes from it for each output rather
-    // than pinning a corpus-token-scale persist nobody will release;
-    // loops use the Managed twin, which acquires the stream once for
-    // both consumers AND releases it
+    // only the hash layer registers (LRU, the standing rule) — the gram
+    // stream recomputes from it for each output rather than pinning a
+    // corpus-token-scale persist nobody will release
     val bInc = fullHashBase(incoming, idCol, textCol)
     val stream = posGramStream(bInc, n, idCol)
     val novelty = noveltyFromGrams(stream, incoming.select(col(idCol)), seen, idCol)
@@ -1341,30 +1314,6 @@ object Dedup {
       .unionByName(stream.select(col("g")))
       .distinct()
     (novelty, merged)
-  }
-
-  /** Cleanup-handle twin of [[advanceGramSet]] — the nightly-loop form:
-    * the incoming batch's hash layer and gram stream are acquired here
-    * and released once the novelty rows are read and the merged set
-    * checkpointed, so a loop that advances per crawl never stacks
-    * registrations (the `noveltyRateManaged` rule). The shared gram
-    * stream feeds both the novelty fold and the state merge — one
-    * explode, two consumers.
-    */
-  def advanceGramSetManaged(seen: DataFrame, incoming: DataFrame, n: Int = 8,
-                            idCol: String = "doc_id", textCol: String = "text")
-      : (DataFrame, DataFrame, () => Unit) = {
-    require(n >= 2, "novelty gram width must be at least 2")
-    val (bInc, relInc) = acquireFullHashBase(incoming, idCol, textCol)
-    // the gram stream feeds BOTH the novelty fold and the state merge;
-    // column pruning makes their exchange subtrees distinct, so without
-    // this acquire the explode would run twice
-    val (stream, relStream) = graft.util.Caching.acquire(posGramStream(bInc, n, idCol))
-    val novelty = noveltyFromGrams(stream, incoming.select(col(idCol)), seen, idCol)
-    val merged = seen.select(col("g"))
-      .unionByName(stream.select(col("g")))
-      .distinct()
-    (novelty, merged, () => { relStream(); relInc() })
   }
 
   /** Inter-run twin of [[duplicateSpans]] — the nightly-crawl shape: spans
@@ -1508,7 +1457,7 @@ object Dedup {
     // gi feeds BOTH the cumulative gram-count merge and the match join's
     // left side — column pruning makes the two subtrees distinct, so
     // without this acquire the incoming batch's posexplode would run
-    // twice per crawl (the advanceGramSetManaged rule)
+    // twice per crawl
     val (gi, relGi) = graft.util.Caching.acquire(posGramStream(bInc, n, idCol))
     val (newCounts, relCounts) = graft.util.Caching.acquire(
       state.gramCounts.unionByName(gi.groupBy("g").agg(count(lit(1)).as("c")))

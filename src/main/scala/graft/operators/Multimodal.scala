@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -450,9 +450,9 @@ object Multimodal {
     * (doc_id, width: int, height: int, samples: array<int>[72],
     * phash: long). The RDD bridge's ONLY job is decoding; every
     * downstream consumer is plan-space over this frame
-    * ([[perceptualHash]] a projection, [[imageEmbedding]] a `transform`
-    * HOF, a keep-best collapse's resolution score a `width·height`
-    * product), so a pipeline that persists the layer decodes its corpus
+    * ([[perceptualHash]] a projection, [[embeddingFromGrid]] a
+    * `transform` HOF, a keep-best collapse's resolution score a
+    * `width·height` product), so a pipeline that persists the layer decodes its corpus
     * exactly once for the WHOLE perceptual family — hashing, embedding,
     * scoring, and every dedup variant built on them. ~300 bytes/row
     * transient decode artifact; the long-lived carry-forward state
@@ -481,23 +481,7 @@ object Multimodal {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Perceptual near-dup image pairs — [[dedupBinary]]'s one-recompression
-    * blind spot closed: [[perceptualHash]] each payload, band the 64-bit
-    * hash into four 16-bit chunks (any equal chunk → candidate; the
-    * pigeonhole guarantees full recall for Hamming distance ≤ 3, hence
-    * the default), cap hot buckets, verify with `bit_count(xor)`. The
-    * exact machinery of `Dedup.simhashPairs` on a perceptual rather than
-    * textual fingerprint: the band join carries (id, 8-byte phash) only —
-    * never payloads — with the hamming verify fused into the join so the
-    * quadratic candidate stream dies in its own stage, the all-or-nothing
-    * bucket cap as the 100 TB quadratic-pairing guard, and one KB-scale
-    * dedup of the verified survivors.
-    */
-  def nearDupImages(media: DataFrame, maxHamming: Int = 3,
-                    maxBucket: Int = 1000): DataFrame =
-    bandedHammingPairs(perceptualHash(media), maxHamming, maxBucket)
-
-  /** The shared banded-Hamming machinery behind [[nearDupImages]] and
+  /** The shared banded-Hamming machinery behind [[nearDupHashes]] and
     * [[nearDupAudio]]: band a 64-bit fingerprint (`doc_id`, `phash`) into
     * four 16-bit chunks (any equal chunk → candidate; the pigeonhole
     * guarantees full recall for Hamming distance ≤ 3), cap hot buckets
@@ -689,10 +673,10 @@ object Multimodal {
   }
 
   /** Perceptual near-dup audio pairs — [[dedupBinary]]'s blind spot
-    * closed for the audio modality exactly as [[nearDupImages]] closes
-    * it for images: a re-levelled or time-rescaled re-encode survives
-    * byte dedup but lands within Hamming budget of its source under
-    * [[audioFingerprint]]. Same [[bandedHammingPairs]] machinery, same
+    * closed for the audio modality exactly as [[nearDupHashes]] over
+    * [[perceptualHash]] closes it for images: a re-levelled or
+    * time-rescaled re-encode survives byte dedup but lands within
+    * Hamming budget of its source under [[audioFingerprint]]. Same [[bandedHammingPairs]] machinery, same
     * 100 TB posture (id-only candidate shuffle, all-or-nothing bucket
     * cap, one decode pass amortized behind the persisted hash frame).
     */
@@ -700,28 +684,11 @@ object Multimodal {
                    maxBucket: Int = 1000): DataFrame =
     bandedHammingPairs(audioFingerprint(media), maxHamming, maxBucket)
 
-  /** Collapse perceptual near-dup clusters to their BEST copy — the query
-    * that ENDS media dedup rather than reporting pairs: [[nearDupHashes]]
-    * pairs over a fingerprint layer → `Dedup.dedupClusters` connected
-    * components → `Dedup.collapseKeepBest` keeping the highest-score
-    * member per cluster (production image dedup keeps the sharpest /
-    * highest-resolution copy, not the first-crawled id; tie → lowest id).
-    * `scores` is any (doc_id, score) frame — [[imageGrid]]'s decoded
-    * `width · height` is the natural resolution score and costs nothing
-    * beyond the layer the hashes already came from. Pure composition:
-    * no new distributed machinery, every stage keeps its own 100 TB
-    * posture (id-only banded pair shuffle, size-gated union-find /
-    * pointer doubling, one min_by aggregate carrying (id, score,
-    * cluster) triples — media bytes and samples ride nothing here).
-    */
-  def collapseNearDupMedia(hashes: DataFrame, scores: DataFrame,
-                           maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame =
-    Dedup.collapseKeepBest(hashes.select("doc_id"),
-      nearDupHashes(hashes, maxHamming, maxBucket), scores)
-
-  /** [[nearDupImages]]/[[nearDupAudio]] over PRE-COMPUTED fingerprints —
-    * the form a pipeline that maintains a fingerprint LAYER calls: decode
-    * once, consume many (self pairs, incremental, evolution, streaming all
+  /** Perceptual near-dup pairs over PRE-COMPUTED 64-bit fingerprints —
+    * `nearDupHashes(perceptualHash(media))` closes [[dedupBinary]]'s
+    * one-recompression blind spot for images, and it is the form a
+    * pipeline that maintains a fingerprint LAYER calls: decode once,
+    * consume many (self pairs, incremental, evolution, streaming all
     * read the same 16-byte/row frame). Fingerprinting is per-row, so
     * `fp(media.filter(p)) == fp(media).filter(p)` and every family member
     * is a filter over one persisted layer instead of its own decode pass.
@@ -834,21 +801,14 @@ object Multimodal {
     (pairs, merged, release)
   }
 
-  /** Coarse pixel-moment embedding: the [[gridSamples]] 9×8 grid as a
-    * 72-dim unit-range vector (sample ÷ 255) — the bridge from decoded
-    * pixels into the vector family (`Similarity.cosineNearDup`,
-    * `semanticDedup`, ANN top-k) with zero new operator code downstream.
-    * A production deployment swaps the grid for a model embedding inside
-    * the same decode loop; every downstream plan is unchanged.
-    * Undecodable payloads are dropped, like [[perceptualHash]].
-    */
-  def imageEmbedding(media: DataFrame): DataFrame =
-    embeddingFromGrid(imageGrid(media))
-
-  /** [[imageEmbedding]] over a pre-decoded [[imageGrid]] layer — a pure
-    * `transform` HOF, no second decode pass: `sample ÷ 255` per element
-    * (int→double is exact, so the values are bit-identical to the old
-    * bridge-side map).
+  /** Coarse pixel-moment embedding over a pre-decoded [[imageGrid]]
+    * layer: the 9×8 grid as a 72-dim unit-range vector (sample ÷ 255) —
+    * the bridge from decoded pixels into the vector family
+    * (`Similarity.cosineNearDup`, `semanticDedup`, ANN top-k) with zero
+    * new operator code downstream. A pure `transform` HOF, no second
+    * decode pass (int→double is exact). A production deployment swaps the
+    * grid for a model embedding inside the same decode loop; every
+    * downstream plan is unchanged.
     */
   def embeddingFromGrid(grid: DataFrame): DataFrame =
     grid.select(col("doc_id"),
@@ -1003,26 +963,18 @@ object Multimodal {
         transform(col("__fs"), f => f.getField("phash")), w)).as("sketch_hash"))
       .filter(col("sketch_hash").isNotNull)
 
-  /** Perceptual near-dup VIDEO pairs — the last unprotected modality
-    * closed: [[videoFrameHashes]] per-frame dHash, [[videoSketch]]
-    * winnow sequence fingerprint, then videos sharing at least
-    * `minShared` sketch hashes pair with their shared count. A
-    * re-encoded, spatially rescaled, or temporally trimmed copy keeps
-    * the interior window minima and collapses; distinct clips share
-    * (almost) none. Same 100 TB posture as every banded family: the
-    * sketch join carries (hash, id) pairs only, hot sketch keys (a
-    * black-frame run, a test pattern) are capped ALL-or-nothing before
-    * the self-join (`capBuckets`), and the count aggregate emits one
-    * row per candidate pair. The sketch frame is guard-persisted: it
-    * feeds both join sides, and without the cache each side re-decodes
-    * the corpus.
-    */
-  def nearDupVideo(media: DataFrame, w: Int = 4, minShared: Int = 2,
-                   maxBucket: Int = 1000): DataFrame =
-    nearDupVideoSketches(videoSketch(videoFrameHashes(media), w), minShared, maxBucket)
-
-  /** [[nearDupVideo]] over a PRE-COMPUTED (doc_id, sketch_hash) layer —
-    * the decode-once form, like [[nearDupHashes]] for stills.
+  /** Perceptual near-dup VIDEO pairs over a (doc_id, sketch_hash) layer
+    * — [[videoFrameHashes]] per-frame dHash, then the [[videoSketch]]
+    * winnow sequence fingerprint, decoded once like [[nearDupHashes]] for
+    * stills. Videos sharing at least `minShared` sketch hashes pair with
+    * their shared count. A re-encoded, spatially rescaled, or temporally
+    * trimmed copy keeps the interior window minima and collapses;
+    * distinct clips share (almost) none. Same 100 TB posture as every
+    * banded family: the sketch join carries (hash, id) pairs only, hot
+    * sketch keys (a black-frame run, a test pattern) are capped
+    * ALL-or-nothing before the self-join (`capBuckets`), and the count
+    * aggregate emits one row per candidate pair. The sketch frame is
+    * guard-persisted: it feeds both join sides.
     */
   def nearDupVideoSketches(sketches: DataFrame, minShared: Int = 2,
                            maxBucket: Int = 1000): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 
@@ -48,7 +48,8 @@ object Ranking {
       size(filter(col("__tk"), x => x === lit(t))).cast("long").as(s"__tf$i")
     }
     // __tk is a materialized column reference — the HOF-lambda rule
-    // (Dedup.gramsOf): an inlined tokenize would re-run per element.
+    // (docs/SCALE.md, Text analysis): an inlined tokenize would re-run
+    // per element.
     // persisted: BOTH the stats aggregate and the scoring projection read
     // this frame — without the cache the corpus is scanned and re-tokenized
     // twice (the dominant cost). Lifecycle as Dedup.persistedBase:

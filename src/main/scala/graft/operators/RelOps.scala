@@ -144,40 +144,6 @@ object RelOps {
     }.reduce(_ unionByName _)
   }
 
-  /** Deterministic debug sample: the n lowest-key rows (the reference ships
-    * a fixed 100-parcel sample for dev runs, `pls/debug_parcels.py:1-102`,
-    * asserted to be exactly 100 in its tests — here the sample derives from
-    * the data instead of a hardcoded list).
-    */
-  def debugSample(df: DataFrame, key: String, n: Int = 100): DataFrame =
-    // total order (SURVEY 7.4.3): key ties at the limit boundary would
-    // otherwise make WHICH rows ship depend on partitioning — the
-    // remaining columns break ties, so only fully identical rows tie
-    // (and those are interchangeable)
-    df.orderBy(col(key).asc +:
-      df.columns.filterNot(_ == key).toIndexedSeq.map(c => col(c).asc): _*).limit(n)
-
-  /** P11 — quarantine split: partition rows into (passing, violating) for a
-    * constraint, one flag projection, both outputs filter the same plan
-    * (the "quarantine split" alternative to assert-empty in SURVEY §2.2).
-    */
-  def quarantine(df: DataFrame, constraint: Column): (DataFrame, DataFrame) = {
-    // guard-persisted: the two outputs are two separate ACTIONS over the
-    // same flag projection — uncached, each re-executes the upstream
-    // plan, and any nondeterminism there (a sampled source, a re-read of
-    // changing files) could place a row in both or neither side. The
-    // partition contract is therefore BEST-EFFORT: the cache is
-    // LRU-managed with recompute-on-eviction, so under memory pressure an
-    // evicted entry re-executes a nondeterministic upstream anyway. A
-    // caller that must hold the contract over a nondeterministic source
-    // should `localCheckpoint()` its input first (eager, non-recomputable)
-    // and pass the materialized frame here.
-    val flagged = graft.util.Caching.ensurePersisted(
-      df.withColumn("__ok", constraint))
-    (flagged.filter(col("__ok")).drop("__ok"),
-      flagged.filter(!col("__ok") || col("__ok").isNull).drop("__ok"))
-  }
-
   /** Skew-salted join: replicate each `right` row `salt` times and scatter
     * `left` rows uniformly across the replicas, so one hot key spreads over
     * `salt` reducers instead of one straggler task. Use when a key's row
@@ -213,28 +179,8 @@ object RelOps {
     * no accumulation, so no FP-order hazard; timestamps as epoch ms),
     * string extrema in `min_str`/`max_str` — never a double formatted
     * THROUGH a string, where Spark and DuckDB render differently.
-    * At 100 TB swap the exact `countDistinct` (a per-column expand) for
-    * [[profileApprox]] below — same schema, HLL distinct counts, no Expand.
     */
-  def profile(df: DataFrame, cols: Seq[String]): DataFrame =
-    profileWith(df, cols, c => countDistinct(col(c)))
-
-  /** The 100 TB twin of [[profile]] the scaladoc above promises: identical
-    * output schema, but `n_distinct` is `approx_count_distinct` (HLL++,
-    * default 5% rsd). The difference in the plan is structural, not a
-    * constant factor: exact multi-column `countDistinct` plans an Expand
-    * that replicates EVERY input row once per profiled column before the
-    * shuffle (k columns → k× scan output), while the sketch version is one
-    * ordinary partial-agg pass — k fixed-size HLL accumulators per
-    * partition, merged on the driver side of a single-row shuffle
-    * (RelOpsSpec plan-asserts Expand's absence). Extrema and null counts
-    * stay exact — only distinct counting trades accuracy for the pass.
-    */
-  def profileApprox(df: DataFrame, cols: Seq[String], rsd: Double = 0.05): DataFrame =
-    profileWith(df, cols, c => approx_count_distinct(col(c), rsd))
-
-  private def profileWith(df: DataFrame, cols: Seq[String],
-                          distinctAgg: String => Column): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
     val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
     def isStr(c: String) = types(c) == org.apache.spark.sql.types.StringType
@@ -250,7 +196,7 @@ object RelOps {
         // count−count, not sum(when): a zero-row input must profile as
         // n_nulls = 0 (a sum over no rows is NULL), matching the oracle
         (count(lit(1)) - count(col(c))).as(s"__null_$c"),
-        distinctAgg(c).as(s"__nd_$c"),
+        countDistinct(col(c)).as(s"__nd_$c"),
         min(numOf(c)).as(s"__minn_$c"), max(numOf(c)).as(s"__maxn_$c"),
         min(if (isStr(c)) col(c) else lit(null).cast("string")).as(s"__mins_$c"),
         max(if (isStr(c)) col(c) else lit(null).cast("string")).as(s"__maxs_$c"))

@@ -735,8 +735,8 @@ object Similarity {
     * Pure per-row projection — no shuffle, composes with scan pruning.
     * `lo`/`hi` are materialized as OWN multi-referenced columns before the
     * per-element lambda: inlined `array_min(v)` inside `transform` would
-    * re-scan the vector per element (the interpreted-HOF rule —
-    * Dedup.gramsOf). All arithmetic left-to-right in doubles; codes are
+    * re-scan the vector per element (the interpreted-HOF rule,
+    * docs/SCALE.md "Text analysis"). All arithmetic left-to-right in doubles; codes are
     * integers, so the output hash carries no float-formatting risk beyond
     * the two rounded bounds.
     */

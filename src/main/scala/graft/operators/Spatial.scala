@@ -96,24 +96,6 @@ object Spatial {
     zValue(floor((lat + lit(90.0)) / lit(cellSize)).cast("long"),
            floor((lon + lit(180.0)) / lit(cellSize)).cast("long"))
 
-  /** Range-partition + sort a frame along the Z-curve of (latCol, lonCol) —
-    * the write-side layout that makes bounding-box scans skip: rows near in
-    * space land in the same files/row groups, so parquet min/max stats
-    * prune most of the corpus for a spatial predicate. The read-side twin
-    * of `radiusJoin`'s cell bucketing; at 100 TB this is the difference
-    * between a bounding-box query scanning everything and scanning the
-    * touched curve segments. (The same layout primitive Delta/Iceberg call
-    * OPTIMIZE ZORDER BY.)
-    */
-  def zOrdered(df: DataFrame, latCol: String, lonCol: String,
-               cellSize: Double = 0.01, partitions: Int = 0): DataFrame = {
-    val withZ = df.withColumn("__z", zValueOf(col(latCol), col(lonCol), cellSize))
-    val parts = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    withZ.repartitionByRange(parts, col("__z"))
-      .sortWithinPartitions("__z").drop("__z")
-  }
-
   /** Nearest right point within `radius` for each left row that has one —
     * top-1 per left key via a `min_by` struct aggregate (map-side combined;
     * no window sort), ranked by (dist2, tieBreak) for total-order

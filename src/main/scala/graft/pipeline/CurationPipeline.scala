@@ -61,9 +61,7 @@ object CurationPipeline {
     *
     *   1. URL dedup (`Dedup.urlDedup`) — the PRE-content stage: survivor
     *      ids come from a scan pruned to (id, url) and gate the corpus
-    *      through one id-keyed semi join. On a corpus bucketed by its id
-    *      (the layout `SnapshotStore` writes) that join plans exchange-
-    *      free on the big side; the url aggregate itself shuffles
+    *      through one id-keyed semi join; the url aggregate shuffles
     *      (canonical_url, id, count) triples only — no text, no payload.
     *   2. language ID (`TextAnalysis.langId`) — a pure projection.
     *   3. TRAINED quality gate: `Classifier.trainScoreLogistic` trains a

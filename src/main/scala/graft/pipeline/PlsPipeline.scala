@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{IdMap, RelOps}
 
@@ -44,22 +44,6 @@ object PlsPipeline {
     val kept = flagged.filter(col("__mapped").isNotNull).drop("__mapped")
     val dropped = flagged.filter(col("__mapped").isNull).drop("__mapped")
     (kept, dropped)
-  }
-
-  /** A6 the Spark-native way: the dropped-rows count rides the SAME job as
-    * the kept-rows materialization via `Dataset.observe` — the reference's
-    * counted, sampled warning without a second pass or an eager action.
-    * `observation.get` blocks until the first action on the returned frame
-    * completes, then holds Map("n_dropped" -> …).
-    */
-  def pruneAddressesWithMetric(addresses: DataFrame, pidMap: DataFrame)
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val flagged = addresses.join(
-      pidMap.select(col("address_iri")).distinct().withColumn("__mapped", lit(true)),
-      Seq("address_iri"), "left")
-      .observe(obs, sum(when(col("__mapped").isNull, 1L).otherwise(0L)).as("n_dropped"))
-    (flagged.filter(col("__mapped").isNotNull).drop("__mapped"), obs)
   }
 
   /** M6 ×5 — encode the five entity PKs to stable integers, threading the

@@ -159,7 +159,7 @@ object MinMaxByPayloadPruning extends Rule[LogicalPlan] {
     else {
       val newAggList = agg.aggregateExpressions.map { ne =>
         ne.transform {
-          case g @ GetStructField(ae: AggregateExpression, ord, nameOpt)
+          case GetStructField(ae: AggregateExpression, ord, nameOpt)
               if prunable.contains(ae.canonicalized) =>
             val u = prunable(ae.canonicalized)
             val keep = u.used.toIndexedSeq

@@ -35,10 +35,6 @@ object EventsStream {
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n_events"), col("value_cents"))
 
-  /** Streaming variant with a watermark (late data beyond 1h dropped). */
-  def hourlyTypeCountsStreaming(events: DataFrame): DataFrame =
-    hourlyTypeCounts(events.withWatermark("ts", "1 hour"))
-
   /** Custom keyed state via `mapGroupsWithState`: running per-user totals
     * that survive across micro-batches (the KeyValueGroupedDataset state
     * API — for accumulators the built-in windows can't express). Update
@@ -67,25 +63,11 @@ object EventsStream {
       }
   }
 
-  /** Streaming exact dedup with BOUNDED state: keep the first event per
-    * key, dropping repeats that arrive within the watermark window.
-    * `dropDuplicatesWithinWatermark` evicts each key's dedup state once
-    * the watermark passes it — unlike a plain streaming `dropDuplicates`,
-    * whose state grows with every key ever seen and OOMs a 100 TB stream.
-    * Trade: a duplicate arriving later than `lateness` after its first
-    * occurrence is emitted again (at-least-once dedup) — the standard
-    * contract for watermarked streams. Batch twin: `dropDuplicates(keys)`.
-    */
-  def dedupStream(events: DataFrame, keys: Seq[String],
-                  lateness: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keys)
-
   /** Streaming inter-run dedup: drop every arriving document whose content
     * fingerprint already exists in the STATIC baseline corpus — the
     * streaming twin of `Dedup.dedupAgainstBaseline`'s anti-join half, as a
     * stream-static left-anti join (supported with the stream on the left;
-    * no state store involved, so nothing grows with stream volume).
-    * Within-stream duplicates compose via `dedupStream` upstream. The
+    * no state store involved, so nothing grows with stream volume). The
     * baseline side reduces to DISTINCT fingerprints and is GUARD-PERSISTED:
     * a stream-static join re-executes the static subplan on EVERY
     * micro-batch, so an uncached baseline would re-fingerprint and
@@ -98,9 +80,6 @@ object EventsStream {
     * mutable baseline source would make batch output depend on WHEN cache
     * blocks evict (frozen-until-eviction, then silently refreshed) — to
     * pick up a newer baseline, restart the query against the new snapshot.
-    * At even larger baselines, point it at a bucketed fingerprint snapshot
-    * (`SnapshotStore.writeBucketed`) so the cache fill itself reads
-    * pre-partitioned fingerprints instead of re-aggregating the corpus.
     */
   def dedupAgainstBaselineStream(docs: DataFrame, baseline: DataFrame,
                                  textCol: String = "text"): DataFrame = {
@@ -470,7 +449,7 @@ object EventsStream {
       }
   }
 
-  /** The shared funnel fold: advance `done0` with this invocation's
+  /** The funnel fold: advance `done0` with this invocation's
     * events, greedily taking the first event of the awaited step in
     * ascending key order. Drop-before-buffer: an event of an already-
     * completed step, or keyed at/below the last completion, can never
@@ -497,75 +476,6 @@ object EventsStream {
       }
     }
     done
-  }
-
-  /** Streaming funnel with ABANDONMENT detection — the `EventTimeTimeout`
-    * counterpart of [[funnelProgress]], and the state-EVICTION semantics a
-    * `NoTimeout` operator cannot express: the store holds only in-flight
-    * funnels. Each user emits at most one append-mode row per funnel run:
-    *
-    *   - `(user, 3, "converted")` in the micro-batch whose events complete
-    *     the final step (state removed immediately);
-    *   - `(user, depth, "abandoned")` when the WATERMARK moves `gapMinutes`
-    *     of event time past their last completed step with the funnel still
-    *     open — fired by the state-store timeout, so no per-user scan.
-    *
-    * The abandonment clock is the GLOBAL watermark, which advances with
-    * observed STEP traffic: the optimizer pushes the step filter below
-    * the watermark node (the predicate doesn't reference `ts`), so
-    * non-step events never reach the clock — irrelevant on a busy stream
-    * where other users' step events keep it moving, but a test must
-    * advance time with step events. The timeout timestamp is clamped above
-    * the current watermark (`setTimeoutTimestamp` rejects past-due
-    * stamps); users whose state was evicted re-enter a FRESH funnel if
-    * step events arrive later — by then their row was already emitted,
-    * the same at-most-once-per-run contract a completed user has.
-    * Progress folds via [[funnelProgress]]'s exact `advanceFunnel`.
-    */
-  def funnelWithAbandonment(events: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                            steps: Seq[String] = Seq("view", "click", "purchase"),
-                            gapMinutes: Int = 60, lateness: String = "10 minutes")
-      : org.apache.spark.sql.Dataset[(Long, Long, String)] = {
-    require(steps.nonEmpty, "steps must be non-empty")
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
-    val tieMod = 1L << 20
-    val gapMs = gapMinutes * 60000L
-    events
-      .withWatermark("ts", lateness)
-      .filter(col("event_type").isin(steps: _*))
-      // ts rides along unused: the event-time-timeout checker requires the
-      // WATERMARKED attribute to still exist in the stateful operator's
-      // input — projecting it away severs the watermark association
-      .select(col("user_id").cast("long"), col("event_type"),
-        (unix_millis(col("ts")) * tieMod + pmod(col("event_id"), lit(tieMod))).as("k"),
-        col("ts"))
-      .filter(col("user_id").isNotNull) // primitive key field; null would poison
-      .as[(Long, String, Option[Long], java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Vector[Long], (Long, Long, String)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (user, rows, state) =>
-          if (state.hasTimedOut) {
-            val depth = state.getOption.map(_.length.toLong).getOrElse(0L)
-            state.remove()
-            Iterator.single((user, depth, "abandoned"))
-          } else {
-            val done = advanceFunnel(
-              state.getOption.getOrElse(Vector.empty[Long]),
-              rows.map(r => (r._1, r._2, r._3)), steps)
-            if (done.length == steps.length) {
-              if (state.exists) state.remove()
-              Iterator.single((user, done.length.toLong, "converted"))
-            } else if (done.nonEmpty) {
-              state.update(done)
-              state.setTimeoutTimestamp(math.max(
-                Math.floorDiv(done.last, tieMod) + gapMs,
-                state.getCurrentWatermarkMs() + 1))
-              Iterator.empty
-            } else Iterator.empty // no progress yet: nothing to abandon
-          }
-      }
   }
 
   /** Versioned state store for `upsertStream`. Each write lands in its own
@@ -694,23 +604,20 @@ object EventsStream {
       }
       .start()
 
-  /** Session windows via the native `session_window` aggregation — the
-    * idiomatic Spark shape that runs identically in batch and Structured
-    * Streaming (with a watermark, sessions emit on close in append mode).
-    * A session extends while consecutive events are within `gapMinutes`;
+  /** Session windows via the native `session_window` aggregation. A
+    * session extends while consecutive events are within `gapMinutes`;
     * window start = first event, end = last event + gap. Grouping is
     * identical to `sessionize`'s lag/cumsum formulation — only the output
     * shape differs (window bounds instead of ordinals).
     */
   def sessionWindows(events: DataFrame, gapMinutes: Int = 30): DataFrame =
-    sessionAgg(msTruncated(events), gapMinutes)
-
-  /** Streaming twin: watermarked, emits closed sessions in append mode.
-    * Truncation happens BEFORE the watermark so `session_window` groups on
-    * exactly the watermarked event-time column.
-    */
-  def sessionWindowsStreaming(events: DataFrame, gapMinutes: Int = 30): DataFrame =
-    sessionAgg(msTruncated(events).withWatermark("ts", s"$gapMinutes minutes"), gapMinutes)
+    msTruncated(events)
+      .groupBy(session_window(col("ts"), s"$gapMinutes minutes").as("w"), col("user_id"))
+      .agg(count(lit(1)).cast("long").as("n_events"))
+      .select(col("user_id"),
+        unix_millis(col("w.start")).as("start_ms"),
+        unix_millis(col("w.end")).as("end_ms"),
+        col("n_events"))
 
   /** `ts` truncated to MILLISECONDS: the source carries ns-precision
     * timestamps (µs after Spark's read), and every other time operator —
@@ -722,18 +629,9 @@ object EventsStream {
   private def msTruncated(events: DataFrame): DataFrame =
     events.withColumn("ts", timestamp_millis(unix_millis(col("ts"))))
 
-  private def sessionAgg(events: DataFrame, gapMinutes: Int): DataFrame =
-    events
-      .groupBy(session_window(col("ts"), s"$gapMinutes minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).cast("long").as("n_events"))
-      .select(col("user_id"),
-        unix_millis(col("w.start")).as("start_ms"),
-        unix_millis(col("w.end")).as("end_ms"),
-        col("n_events"))
-
   /** Sessionization: a session ends after `gapMinutes` of user inactivity.
     * Batch implementation via lag + cumulative sum (`sessionWindows` above
-    * is the streaming-native twin; session grouping is identical).
+    * is the `session_window` formulation; session grouping is identical).
     *
     * All ordering/arithmetic happens on epoch MILLISECONDS (`unix_millis`),
     * not raw timestamps: the source carries ns precision that Spark

@@ -76,15 +76,6 @@ class BpeSpec extends SparkSpec {
       "e" -> 1L, "s" -> 1L, "t" -> 1L, Bpe.EOW -> 1L))
   }
 
-  test("encodeDocs: (wpos, spos) lexicographic is the document token order") {
-    val docs = corpus((1L, "ab ba"))
-    val merges = Seq(("a", "b"))
-    val toks = Bpe.encodeDocs(docs, merges).collect()
-      .sortBy(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("wpos"), r.getAs[Int]("spos")))
-      .map(_.getAs[String]("token")).toSeq
-    assert(toks == Seq("ab", Bpe.EOW, "b", "a", Bpe.EOW))
-  }
-
   test("docTokenCounts: exact counts under the vocabulary; tokenless docs count 0") {
     val s = spark; import s.implicits._
     val docs = Seq((1L, "low low lowest"), (2L, "low"), (3L, " ")).toDF("doc_id", "text")

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Dev probe (test scope, never shipped in a query path): decompose the
   * classifier training loop's per-iteration wall and A/B candidate
-  * iteration shapes — the measurement VERDICT r21 #4 / OPTIMIZATION_r22
-  * §"Not yet optimized" asked for before touching the adjudicated
-  * per-iteration literal-weights shape.
+  * iteration shapes — the measurement `docs/SCALE.md` §"Quality
+  * classifier" asks for before touching the adjudicated per-iteration
+  * literal-weights shape.
   *
   * Modes: `list`   = the shipped shape (per-doc agg with collect_list,
   *                   explode, per-bucket agg);

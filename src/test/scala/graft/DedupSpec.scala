@@ -270,14 +270,6 @@ class DedupSpec extends SparkSpec {
     assert(out == Seq((1L, "text_1"), (4L, "text_4"), (5L, "text_5"), (7L, "text_7")))
   }
 
-  test("shingles: n-grams of normalized text, distinct, short-text fallback") {
-    val s = spark; import s.implicits._
-    val out = Seq("a b c d", "x y").toDF("t")
-      .select(Dedup.shingles(col("t"), 3).as("sh")).collect()
-    assert(out(0).getSeq[String](0) == Seq("a b c", "b c d"))
-    assert(out(1).getSeq[String](0) == Seq("x y"))
-  }
-
   test("advanceSpanBaseline: the occurrence cap accumulates ACROSS crawls") {
     val s = spark; import s.implicits._
     // one gram dominates: 30 identical tokens per doc → the n=3 gram

@@ -35,7 +35,7 @@ class EventsStreamSpec extends SparkSpec {
       .toDF("event_id", "ts_s", "user_id", "event_type", "value")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
 
-    val q = EventsStream.hourlyTypeCountsStreaming(streamDf)
+    val q = EventsStream.hourlyTypeCounts(streamDf.withWatermark("ts", "1 hour"))
       .writeStream.format("memory").queryName("hourly_out").outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
 
@@ -48,14 +48,14 @@ class EventsStreamSpec extends SparkSpec {
   test("watermark drops a late row: an event older than the watermark never reaches its window") {
     // the one behavior the MemoryStream==batch twins CANNOT mirror: batch
     // has no lateness, so this drives withWatermark's dropping semantics
-    // directly — append mode, 1 h watermark on hourlyTypeCountsStreaming
+    // directly — append mode, 1 h watermark upstream of hourlyTypeCounts
     val s = spark; import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, Long, String, Double)]
     val streamDf = mem.toDF()
       .toDF("event_id", "ts_s", "user_id", "event_type", "value")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    val q = EventsStream.hourlyTypeCountsStreaming(streamDf)
+    val q = EventsStream.hourlyTypeCounts(streamDf.withWatermark("ts", "1 hour"))
       .writeStream.format("memory").queryName("late_out").outputMode("append").start()
     try {
       // batch 1: one on-time click in the 10:00 window
@@ -83,43 +83,6 @@ class EventsStreamSpec extends SparkSpec {
     assert(!rows.valuesIterator.contains((2L, 10000L)))
   }
 
-  test("funnelWithAbandonment: converts emit once, stalled funnels time out via event time, state evicts") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long, String, Double)]
-    val streamDf = mem.toDF()
-      .toDF("event_id", "ts_s", "user_id", "event_type", "value")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    val q = graft.streaming.EventsStream
-      .funnelWithAbandonment(streamDf, gapMinutes = 60, lateness = "10 minutes")
-      .toDF("user_id", "depth", "status")
-      .writeStream.format("memory").queryName("fab_out").outputMode("append").start()
-    try {
-      // u1 stalls at depth 2; u2 converts in one batch; u3 never progresses
-      // (click before any view — not a first step, so no state is stored)
-      mem.addData(
-        (1L, "2026-01-01 10:00:00", 1L, "view", 0.0),
-        (2L, "2026-01-01 10:01:00", 1L, "click", 0.0),
-        (3L, "2026-01-01 10:00:00", 2L, "view", 0.0),
-        (4L, "2026-01-01 10:01:00", 2L, "click", 0.0),
-        (5L, "2026-01-01 10:02:00", 2L, "purchase", 0.0),
-        (6L, "2026-01-01 10:00:00", 3L, "click", 0.0))
-      q.processAllAvailable()
-      // STEP traffic from another user advances the watermark past u1's
-      // last progress (10:01) + 60 min gap (+10 min lateness) → timeout
-      // fires; u9's own fresh funnel (view@11:30) stays in flight: its
-      // timeout (12:30) is past the final watermark (11:50)
-      mem.addData((7L, "2026-01-01 11:30:00", 9L, "view", 0.0))
-      q.processAllAvailable()
-      mem.addData((8L, "2026-01-01 12:00:00", 9L, "view", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("fab_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(out === Set((2L, 3L, "converted"), (1L, 2L, "abandoned")),
-      s"got $out")
-  }
-
   test("dedupAgainstBaselineStream: stream-static anti join == batch dedup half") {
     val s = spark; import s.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -143,31 +106,6 @@ class EventsStreamSpec extends SparkSpec {
     assert(batch === streamed)
   }
 
-  test("sessionWindows: streaming (watermark, append mode) closed sessions == batch sessions") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long, String, Double)]
-    mem.addData(eventRows.map(e => (e._1, e._2, e._3, e._4, e._5)): _*)
-    val streamDf = mem.toDF()
-      .toDF("event_id", "ts_s", "user_id", "event_type", "value")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-
-    val q = EventsStream.sessionWindowsStreaming(streamDf, 30)
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // advance the watermark past every open session so they close and emit
-      mem.addData((99L, "2026-01-02 09:00:00", 9L, "tick", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val streamed = spark.table("sess_out").collect().map(_.toSeq).toSet
-    // batch over the same rows; the watermark-tick user's session never
-    // closes in the stream, so it's not expected in the streamed output
-    val batch = EventsStream.sessionWindows(batchDf, 30).collect().map(_.toSeq).toSet
-    assert(streamed == batch, s"streamed=$streamed batch=$batch")
-  }
-
   test("runningUserTotals: mapGroupsWithState accumulates across micro-batches") {
     val s = spark; import s.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -187,32 +125,6 @@ class EventsStreamSpec extends SparkSpec {
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
       .groupBy(_._1).map { case (u, rows) => u -> rows.map(_._2).maxBy(_._1) }
     assert(last == Map(7L -> ((2L, 200L)), 8L -> ((1L, 200L))))
-  }
-
-  test("dedupStream drops within-watermark repeats across micro-batches, state stays bounded") {
-    val s = spark; import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, String)]
-    val streamDf = mem.toDF().toDF("k", "ts_s", "v")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    val q = EventsStream.dedupStream(streamDf, Seq("k"), "10 minutes")
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      mem.addData((1L, "2026-01-01 10:00:00", "first"), (2L, "2026-01-01 10:00:00", "first"))
-      q.processAllAvailable()
-      // duplicate of k=1 within the watermark window: dropped
-      mem.addData((1L, "2026-01-01 10:05:00", "dup"))
-      q.processAllAvailable()
-      // advance event time far past the watermark, then repeat k=1: its
-      // dedup state was evicted, so the late duplicate is emitted again
-      mem.addData((3L, "2026-01-01 12:00:00", "tick"))
-      q.processAllAvailable()
-      mem.addData((1L, "2026-01-01 12:00:01", "re-emitted"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("dedup_out").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
-    assert(out == Seq((1L, "first"), (1L, "re-emitted"), (2L, "first"), (3L, "tick")))
   }
 
   test("spendAlerts: flatMapGroupsWithState emits per crossed boundary, across micro-batches") {
@@ -415,7 +327,8 @@ class EventsStreamSpec extends SparkSpec {
     val weights = graft.operators.Classifier.trainWeights(
       corpus, org.apache.spark.sql.functions.col("text").contains("customer"),
       iters = 3, buckets = 64)
-    val batchWant = graft.operators.Classifier.scoreWeights(corpus, weights)
+    val batchWant = graft.operators.Classifier.scoreLogistic(corpus,
+      graft.operators.Classifier.weightsToArray(weights), "doc_id", "text")
       .collect().map(_.toSeq).toSet
     assert(batchWant.size == 5)
 

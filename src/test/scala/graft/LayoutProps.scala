@@ -13,9 +13,7 @@ import graft.operators.{RelOps, Spatial}
   *   - `RelOps.saltedJoin` against the plain join it must be
   *     row-for-row equivalent to (MULTISET equality — duplicate keys on
   *     both sides are where a salting bug would double or drop rows),
-  *     for inner and left joins;
-  *   - `Spatial.zOrdered` preserves the input multiset exactly (it only
-  *     moves rows).
+  *     for inner and left joins.
   */
 object LayoutProps extends Properties("Layout") {
 
@@ -55,17 +53,5 @@ object LayoutProps extends Properties("Layout") {
         val want = left.join(right, Seq("k"), joinType)
           .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
         got == want
-    }
-
-  property("zOrdered preserves the input multiset exactly") =
-    forAllNoShrink(Gen.listOfN(25, Gen.zip(
-      Gen.choose(-900, 900).map(_ / 10.0), Gen.choose(-1800, 1800).map(_ / 10.0)))) { pts =>
-      val s = spark; import s.implicits._
-      val df = pts.zipWithIndex.map { case ((la, lo), i) => (i.toLong, la, lo) }
-        .toDF("id", "lat", "lon")
-      val out = Spatial.zOrdered(df, "lat", "lon")
-        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-      val in = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-      out == in
     }
 }

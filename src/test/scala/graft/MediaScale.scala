@@ -61,7 +61,7 @@ object MediaScale {
     }
 
     family("images", Multimodal.syntheticImagesPatterned(docs),
-      Multimodal.perceptualHash, m => Multimodal.nearDupImages(m))
+      Multimodal.perceptualHash, m => Multimodal.nearDupHashes(Multimodal.perceptualHash(m)))
     family("audio", Multimodal.syntheticAudioPatterned(docs),
       Multimodal.audioFingerprint, m => Multimodal.nearDupAudio(m))
 
@@ -77,7 +77,7 @@ object MediaScale {
       media.filter(org.apache.spark.sql.functions.col("doc_id") >= split))
     val (nInc, wallInc) = time(
       Multimodal.nearDupAgainstBaseline(batchFp, state).count())
-    val (nFull, wallFull) = time(Multimodal.nearDupImages(media).count())
+    val (nFull, wallFull) = time(Multimodal.nearDupHashes(Multimodal.perceptualHash(media)).count())
     println(f"incremental 10%% batch vs state: $nInc pairs in $wallInc%6.2f s | " +
       f"full self near-dup (state cached): $nFull pairs in $wallFull%6.2f s")
 

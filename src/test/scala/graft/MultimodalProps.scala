@@ -123,7 +123,8 @@ object MultimodalProps extends Properties("Multimodal") {
     } yield (w, h, px)))) { imgs =>
       val s = spark; import s.implicits._
       val rows = imgs.zipWithIndex.map { case ((w, h, px), i) => (i.toLong, png(w, h, px)) }
-      val got = Multimodal.nearDupImages(rows.toDF("doc_id", "media"), maxBucket = 1000000)
+      val got = Multimodal.nearDupHashes(
+          Multimodal.perceptualHash(rows.toDF("doc_id", "media")), maxBucket = 1000000)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val hashes = imgs.zipWithIndex.map { case ((w, h, px), i) =>
         i.toLong -> mirrorHash(mirrorSamples(w, h, px)) }
@@ -223,7 +224,7 @@ object MultimodalProps extends Properties("Multimodal") {
     } yield (w, h, px)))) { imgs =>
       val s = spark; import s.implicits._
       val rows = imgs.zipWithIndex.map { case ((w, h, px), i) => (i.toLong, png(w, h, px)) }
-      val got = Multimodal.imageEmbedding(rows.toDF("doc_id", "media"))
+      val got = Multimodal.embeddingFromGrid(Multimodal.imageGrid(rows.toDF("doc_id", "media")))
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toVector).toMap
       val want = imgs.zipWithIndex.map { case ((w, h, px), i) =>
         i.toLong -> mirrorSamples(w, h, px).map(_.toDouble / 255.0).toVector
@@ -245,10 +246,11 @@ object MultimodalProps extends Properties("Multimodal") {
       } yield hs.zip(sc).zipWithIndex.map { case ((h, s), i) => (i.toLong, h, s) }
     }) { rows =>
       val s = spark; import s.implicits._
-      val got = Multimodal.collapseNearDupMedia(
-          rows.map(r => (r._1, r._2)).toDF("doc_id", "phash"),
-          rows.map(r => (r._1, r._3)).toDF("doc_id", "score"),
-          maxBucket = 1000000)
+      val hashes = rows.map(r => (r._1, r._2)).toDF("doc_id", "phash")
+      val got = graft.operators.Dedup.collapseKeepBest(
+          hashes.select("doc_id"),
+          Multimodal.nearDupHashes(hashes, maxBucket = 1000000),
+          rows.map(r => (r._1, r._3)).toDF("doc_id", "score"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
       // mirror: brute banded pairs -> union-find -> max-score (tie min id)
       val pairs = for {
@@ -313,8 +315,9 @@ object MultimodalProps extends Properties("Multimodal") {
           ((i + 100).toLong, render(pats.drop(trim), 27, 32)))
       }
       val rows = rendered.map { case (id, frames) => (id, videoPayload(frames)) }
-      val got = Multimodal.nearDupVideo(
-          rows.toDF("doc_id", "media"), w = 4, minShared = 2, maxBucket = 1000000)
+      val got = Multimodal.nearDupVideoSketches(
+          Multimodal.videoSketch(Multimodal.videoFrameHashes(rows.toDF("doc_id", "media")), w = 4),
+          minShared = 2, maxBucket = 1000000)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val sketches = rendered.map { case (id, frames) => id -> mirrorVideoSketch(frames, 4) }
       val want = (for {

@@ -136,7 +136,7 @@ class MultimodalSpec extends SparkSpec {
     val media = Multimodal.syntheticImagesPatterned(fixture)
     // byte-exact dedup finds NO classes: every payload differs (dims differ)
     assert(Multimodal.dedupBinary(media).count() == 20)
-    val pairs = Multimodal.nearDupImages(media)
+    val pairs = Multimodal.nearDupHashes(Multimodal.perceptualHash(media))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // both planted twins found, within the hamming budget
     assert(pairs.contains((8L, 9L)) && pairs((8L, 9L)) <= 3)
@@ -226,7 +226,8 @@ class MultimodalSpec extends SparkSpec {
   test("imageEmbedding bridges decoded pixels into cosineNearDup: twins pair near 1.0") {
     val s = spark; import s.implicits._
     val fixture = (1L to 20L).map(i => (i, "x" * (3 + i.toInt * 5 % 29))).toDF("doc_id", "text")
-    val emb = Multimodal.imageEmbedding(Multimodal.syntheticImagesPatterned(fixture))
+    val emb = Multimodal.embeddingFromGrid(
+      Multimodal.imageGrid(Multimodal.syntheticImagesPatterned(fixture)))
     assert(emb.count() == 20 && emb.head().getSeq[Double](1).size == 72)
     val pairs = graft.operators.Similarity
       .cosineNearDup(emb, threshold = 0.9, dim = 72, nPlanes = 8, idCol = "doc_id")

@@ -57,16 +57,6 @@ class PlsFlowSpec extends SparkSpec {
     assert(kept.columns.toSeq == addresses.columns.toSeq) // no flag leakage
   }
 
-  test("pruneAddressesWithMetric: dropped count observed on the keep-side job itself") {
-    val s = spark; import s.implicits._
-    val addresses = Seq(("iri-1", "p1", "s1"), ("iri-2", "p2", "s2"), ("iri-3", "p3", "s3"))
-      .toDF("address_iri", "address_pid", "site_id")
-    val pidMap = Seq(("iri-1", "p1")).toDF("address_iri", "address_pid")
-    val (kept, obs) = PlsPipeline.pruneAddressesWithMetric(addresses, pidMap)
-    assert(kept.count() == 1) // the one action; the metric rides it
-    assert(obs.get("n_dropped") == 2L)
-  }
-
   test("full run carries forward, upserts pid map, prunes and backfills") {
     val s = spark; import s.implicits._
     val prevGeo = Seq(("g1", "PC", "p1", "stale", 1.0, 2.0), ("g9", "PC", "p9", "stale", 3.0, 4.0))

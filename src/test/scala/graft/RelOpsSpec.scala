@@ -63,13 +63,6 @@ class RelOpsSpec extends SparkSpec {
     assert(out == Seq(Row("all_good", 0L), Row("some_bad", 2L)))
   }
 
-  test("debugSample: exactly n rows, lowest keys, stable across calls") {
-    val part = graft.sources.Tables.part(spark, "/root/testdata/sf0.01")
-    val s1 = RelOps.debugSample(part, "p_partkey").collect().map(_.getLong(0)).toSeq
-    val s2 = RelOps.debugSample(part, "p_partkey").collect().map(_.getLong(0)).toSeq
-    assert(s1.length == 100 && s1 == s2 && s1 == s1.sorted)
-  }
-
   test("parseEsriDatetime round-trips esriDatetime") {
     val s = spark; import s.implicits._
     import graft.functions.GraftFunctions
@@ -77,14 +70,6 @@ class RelOpsSpec extends SparkSpec {
       .select(GraftFunctions.esriDatetime(GraftFunctions.parseEsriDatetime(col("t"))).as("rt"))
       .head().getString(0)
     assert(n == "2026-01-05 04:30:00")
-  }
-
-  test("quarantine splits pass/fail including null-constraint rows") {
-    val s = spark; import s.implicits._
-    val df = Seq(("a", Some(5)), ("b", Some(-1)), ("c", None)).toDF("k", "v")
-    val (good, bad) = RelOps.quarantine(df, col("v") > 0)
-    assert(good.select("k").as[String].collect().toSeq == Seq("a"))
-    assert(bad.select("k").as[String].collect().sorted.toSeq == Seq("b", "c"))
   }
 
   test("diffFrames classifies added/removed/changed and drops unchanged") {
@@ -187,26 +172,6 @@ class RelOpsSpec extends SparkSpec {
       .map(r => r.getString(0) -> r).toMap
     assert(empty("k").getLong(1) === 0L && empty("k").getLong(2) === 0L)
     assert(empty("s").getLong(2) === 0L && empty("s").isNullAt(6))
-  }
-
-  test("profileApprox: same schema + exact stats except HLL distinct; NO Expand in the plan") {
-    val s = spark; import s.implicits._
-    val df = Seq((1L, Some("b")), (2L, None: Option[String]), (3L, Some("a")), (3L, Some("a")))
-      .toDF("k", "s")
-    val exact = RelOps.profile(df, Seq("k", "s"))
-    val approx = RelOps.profileApprox(df, Seq("k", "s"))
-    assert(approx.schema === exact.schema)
-    val out = approx.collect().map(r => r.getString(0) -> r).toMap
-    // at 3 / 2 distinct values HLL at 5% rsd is exact; nulls/extrema always are
-    assert(out("k").getLong(2) === 0L && out("k").getLong(3) === 3L)
-    assert(out("s").getLong(2) === 1L && out("s").getLong(3) === 2L)
-    assert(out("k").getDouble(4) === 1.0 && out("s").getString(7) === "b")
-    // the structural claim: exact countDistinct plans an Expand (k× row
-    // replication before the shuffle); the sketch path must not
-    val exactPlan = exact.queryExecution.executedPlan.toString
-    val approxPlan = approx.queryExecution.executedPlan.toString
-    assert(exactPlan.contains("Expand"), s"baseline assumption broke:\n$exactPlan")
-    assert(!approxPlan.contains("Expand"), s"profileApprox must not Expand:\n$approxPlan")
   }
 
   test("rangeJoin == brute-force containment; exactly-once; no cartesian in the plan") {

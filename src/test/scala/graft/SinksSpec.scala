@@ -189,29 +189,6 @@ class SinksSpec extends SparkSpec {
     assert(LazyFetcherState.authed.get())
   }
 
-  test("bucketed snapshot tables join WITHOUT a shuffle on either side") {
-    val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("bucketed-snap")
-    val store = new graft.sources.SnapshotStore(dir.toString)
-    val prev = (1L to 1000L).map(i => (i, s"prev_$i")).toDF("k", "pv")
-    val cur = (500L to 1500L).map(i => (i, s"cur_$i")).toDF("k", "cv")
-    val tPrev = store.writeBucketed(prev, "run1", "prev", "k", 8)
-    val tCur = store.writeBucketed(cur, "run1", "cur", "k", 8)
-    // disable broadcast so the join would otherwise need a full shuffle
-    val thresholdBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table(tPrev).join(spark.table(tCur), Seq("k"))
-      val physical = joined.queryExecution.executedPlan.toString
-      assert(!physical.contains("Exchange"), s"bucketed join still shuffles:\n$physical")
-      assert(joined.count() == 501)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdBefore)
-      spark.sql(s"DROP TABLE IF EXISTS $tPrev")
-      spark.sql(s"DROP TABLE IF EXISTS $tCur")
-    }
-  }
-
   test("run lock: held lock blocks, expired lock is reclaimable") {
     val dir = Files.createTempDirectory("locks")
     var clock = 1000L
@@ -396,7 +373,7 @@ class SinksSpec extends SparkSpec {
     lock.acquire(); lock.release() // re-acquirable = released by the failed run
   }
 
-  test("latestRun restores the latest COMMITTED run; uncommitted-only roots keep the legacy rule") {
+  test("latestRun restores only COMMITTED runs, newest first; none when nothing committed") {
     val s = spark; import s.implicits._
     val root = Files.createTempDirectory("snapcommit").toString
     val store = new SnapshotStore(root)
@@ -410,11 +387,15 @@ class SinksSpec extends SparkSpec {
     // once the newer run commits, it wins
     store.commit(s, "2026-02-02T00-00-00")
     assert(store.latestRun(s).contains("2026-02-02T00-00-00"))
-    // marker-free legacy root: plain latest-by-name fallback
-    val legacyRoot = Files.createTempDirectory("snaplegacy").toString
-    val legacy = new SnapshotStore(legacyRoot)
-    legacy.write(df, "r1", "t"); legacy.write(df, "r2", "t")
-    assert(legacy.latestRun(s).contains("r2"))
+    // a root whose runs all lack the marker — even one that carries the
+    // last-written `metadata` table — restores nothing
+    val bareRoot = Files.createTempDirectory("snapbare").toString
+    val bare = new SnapshotStore(bareRoot)
+    bare.write(df, "r1", "t"); bare.write(df, "r2", "t"); bare.write(df, "r2", "metadata")
+    assert(bare.latestRun(s).isEmpty)
+    // committed runs order by descending string, not by write order
+    bare.commit(s, "r2"); bare.commit(s, "r1")
+    assert(bare.latestRun(s).contains("r2"))
   }
 }
 

@@ -84,27 +84,6 @@ class SpatialSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("out of [0, 2^31) range")))
   }
 
-  test("zOrdered write clusters nearby points into the same files") {
-    val s = spark; import s.implicits._
-    val rnd = new scala.util.Random(13)
-    val pts = (0 until 20000).map(i =>
-      (i.toLong, -29.0 + rnd.nextInt(1000) * 0.01, 151.0 + rnd.nextInt(1000) * 0.01))
-      .toDF("id", "lat", "lon")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    graft.operators.Spatial.zOrdered(pts, "lat", "lon", cellSize = 0.01, partitions = 16)
-      .write.mode("overwrite").parquet(s"$dir/z")
-    val spans = spark.read.parquet(s"$dir/z")
-      .groupBy(input_file_name().as("f"))
-      .agg((max("lat") - min("lat")).as("dlat"), (max("lon") - min("lon")).as("dlon"))
-      .collect()
-    assert(spans.length >= 8)
-    // global extent is ~10°×10°; a z-ordered file covers a small tile of it.
-    // 16 random files would each span ~the full extent; require the MEAN
-    // file to cover well under half of it per axis.
-    val meanArea = spans.map(r => r.getDouble(1) * r.getDouble(2)).sum / spans.length
-    assert(meanArea < 0.25 * (10.0 * 10.0), s"mean file area $meanArea — no spatial clustering")
-  }
-
   test("plan is an equi join on cells — no cartesian/broadcast-nested-loop") {
     val s = spark; import s.implicits._
     val l = points(50, 3).toDF("lid", "llat", "llon")

@@ -26,9 +26,8 @@ class StateCheckpointSpec extends SparkSpec {
     val b1 = Seq((1L, "c d e f g h")).toDF("doc_id", "text")
     val b2 = Seq((2L, "a b c x y z"), (3L, "g h a b")).toDF("doc_id", "text")
     val st = store()
-    val (_, seen1, rel) = Dedup.advanceGramSetManaged(Dedup.initGramSet(b0, n = 3), b1, n = 3)
+    val (_, seen1) = Dedup.advanceGramSet(Dedup.initGramSet(b0, n = 3), b1, n = 3)
     st.write(seen1, "run1", "gram_set")
-    rel()
     val restored = st.read(spark, "run1", "gram_set")
     val (novMem, _) = Dedup.advanceGramSet(seen1, b2, n = 3)
     val (novCkpt, _) = Dedup.advanceGramSet(restored, b2, n = 3)
